@@ -69,7 +69,7 @@ def run_once():
     # route splits by VERIFIED pairs — stage-for-stage the curate_job
     # pipeline (ADVICE r4: routing by raw candidates made the benchmarked
     # pipeline differ from the shipped one for pairs failing verification)
-    split_docs = leakage_safe_split(kept, pairs, "doc_id")
+    split_docs = leakage_safe_split(kept, comps, "doc_id")
     narrow = split_docs.select(
         "doc_id", "split",
         TX.token_count_expr(F.col("text")).cast("long").alias("n_tokens"),

@@ -290,12 +290,13 @@ def main(argv: list[str] | None = None) -> int:
     comps = stage("components", lambda: duplicate_components(pairs, id_col))
 
     # 3. deduped, split, training-ready corpus. Split routing uses the
-    # VERIFIED pairs (a near-dup of a test doc must never reach train);
-    # candidates that failed verification are not near-dups and may split.
+    # components of the VERIFIED pairs (a near-dup of a test doc must never
+    # reach train); candidates that failed verification are not near-dups
+    # and may split.
     def build_corpus():
         drop = comps.where(F.col(id_col) != F.col("component")).select(id_col)
         kept = docs.join(drop, id_col, "left_anti")
-        split_docs = leakage_safe_split(kept, pairs, id_col)
+        split_docs = leakage_safe_split(kept, comps, id_col)
         if args.redact_pii:
             from schema_inference_spark.functions.pii import redact_expr
 
@@ -327,6 +328,11 @@ def main(argv: list[str] | None = None) -> int:
         ),
     )
 
+    def rows(name: str, df) -> int:
+        """The stage's row count as stage() recorded it; a resumed stage
+        was not written by this run, so it is counted here."""
+        return metrics[name]["rows"] if "rows" in metrics[name] else df.count()
+
     splits = {
         r["split"]: r["n"]
         for r in corpus.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -335,10 +341,10 @@ def main(argv: list[str] | None = None) -> int:
     summary = {
         "input_docs": n_input,
         "cross_batch_dropped": n_cross_dropped,
-        "near_dup_pairs": pairs.count(),
-        "docs_dropped": n_input - corpus.count(),
+        "near_dup_pairs": rows("pairs", pairs),
+        "docs_dropped": n_input - rows("corpus", corpus),
         "splits": splits,
-        "packed_docs": packed.count(),
+        "packed_docs": rows("packed", packed),
         "bins": packed.select("bin_id").distinct().count(),
         "stages": metrics,
     }

@@ -4,8 +4,11 @@
 This is the pipeline SeqFilesScan.java:282-373 ran hourly — scan ->
 per-row schema -> distinct-shape counts with integer percents -> top-k ->
 top-N merge under the widening lattice -> protobuf hierarchy emission —
-re-planned Spark-first (single shuffle for the counts; driver-side fold
-only over the tiny top-k set; order-safe proto assembly).
+re-planned Spark-first: one pass of the shape function per parsed row and
+one aggregation for the counts and percents, written as distinct/; the
+top-k is read back from distinct/ (the reference's re-analysis path, not a
+second scan of the input); driver-side fold only over the tiny top-k set;
+order-safe proto assembly.
 
     spark-submit --py-files /tmp/schema_inference_spark.zip \
         jobs/schema_infer_job.py \
@@ -58,7 +61,7 @@ def main(argv: list[str] | None = None) -> int:
         proto_lines_df,
         with_metadata_message,
     )
-    from schema_inference_spark.operators.shapes import shape_counts, top_shapes
+    from schema_inference_spark.operators.shapes import shape_counts, top_of_profile
     from schema_inference_spark.sources.delimited import parse_delimited
     from schema_inference_spark.sources.sequencefile import read_sequencefile_values
     from schema_inference_spark.sources.tables import ensure_utc
@@ -76,20 +79,18 @@ def main(argv: list[str] | None = None) -> int:
         rows = spark.read.text(args.input)
 
     if args.format == "json-docs":
-        shaped = rows.select(flat_json_shape_expr(F.col("value")).alias("schema"))
+        shape = flat_json_shape_expr(F.col("value"))
     else:
-        kv_shape = make_kv_shape_udf()
-        shaped = parse_delimited(rows, "value").select(
-            kv_shape(F.col("kv")).alias("schema")
-        )
-    shaped = shaped.where(F.col("schema").isNotNull())  # P4 null-row filter
+        rows = parse_delimited(rows, "value")
+        shape = make_kv_shape_udf()(F.col("kv"))
 
-    from schema_inference_spark.sources.iceberg import write_table
+    from schema_inference_spark.sources.iceberg import read_table, write_table
 
-    counts = shape_counts(shaped, F.col("schema"))
+    # shape_counts drops null shapes (the P4 null-row filter)
+    counts = shape_counts(rows, shape)
     write_table(counts, f"{args.output}/distinct", mode="overwrite")
 
-    top = top_shapes(shaped, F.col("schema"), k=args.top_k).collect()
+    top = top_of_profile(read_table(spark, f"{args.output}/distinct"), args.top_k).collect()
     if not top:
         print("no parseable rows found")
         return 1

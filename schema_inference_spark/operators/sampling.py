@@ -32,6 +32,22 @@ def split_bucket_sql(id_sql: str, n_buckets: int = 100) -> str:
     return f"(({md5_long_sql(f'({id_sql})::VARCHAR')}) % {n_buckets})"
 
 
+def _split_expr(route: Column, weights: dict[str, int] | None) -> Column:
+    """The split label of ``route``'s hash bucket (see :func:`with_split`)."""
+    weights = weights or {"train": 80, "val": 10, "test": 10}
+    total = sum(weights.values())
+    if total != 100:
+        raise ValueError(f"split weights must sum to 100, got {total}")
+    bucket = split_bucket_expr(route)
+    expr = None
+    edge = 0
+    for name, w in weights.items():
+        edge += w
+        cond = bucket < edge
+        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
+    return expr
+
+
 def with_split(
     df: DataFrame,
     id_col: str,
@@ -39,18 +55,7 @@ def with_split(
 ) -> DataFrame:
     """Add a ``split`` column ('train'/'val'/'test' by default) assigned by
     hash bucket; ``weights`` are integer percents summing to 100."""
-    weights = weights or {"train": 80, "val": 10, "test": 10}
-    total = sum(weights.values())
-    if total != 100:
-        raise ValueError(f"split weights must sum to 100, got {total}")
-    bucket = split_bucket_expr(F.col(id_col))
-    expr = None
-    edge = 0
-    for name, w in weights.items():
-        edge += w
-        cond = bucket < edge
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    return df.withColumn("split", expr)
+    return df.withColumn("split", _split_expr(F.col(id_col), weights))
 
 
 def split_case_sql(id_sql: str, weights: dict[str, int] | None = None) -> str:
@@ -65,40 +70,28 @@ def split_case_sql(id_sql: str, weights: dict[str, int] | None = None) -> str:
 
 def leakage_safe_split(
     df: DataFrame,
-    near_dup_pairs: DataFrame,
+    components: DataFrame,
     id_col: str,
     weights: dict[str, int] | None = None,
 ) -> DataFrame:
     """Train/val/test split that never separates near-duplicates: every
     member of a connected near-dup component is routed by the COMPONENT
     label's hash, so no near-dup of a test document can leak into train
-    (the classic eval-contamination bug). Rows in no pair route by their
-    own id, identically to :func:`with_split`.
+    (the classic eval-contamination bug). Rows in no component route by
+    their own id, identically to :func:`with_split`.
 
-    One components computation (operators/dedup.duplicate_components) +
-    one broadcast-sized left join (components exist only for paired rows,
-    a small fraction of the corpus) + the zero-shuffle split projection.
+    ``components`` is the ``(id_col, component)`` table
+    ``operators.dedup.duplicate_components`` builds from the near-dup
+    pairs; a pipeline that already computed it for dedup passes the same
+    table here. One broadcast-sized left join (components exist only for
+    paired rows, a small fraction of the corpus) + the zero-shuffle split
+    projection.
     """
-    from schema_inference_spark.operators.dedup import duplicate_components
-
-    comps = duplicate_components(near_dup_pairs, id_col).withColumnRenamed(
-        "component", "_component"
+    routed = df.join(
+        components.select(id_col, F.col("component").alias("_component")), id_col, "left"
     )
-    routed = df.join(comps, id_col, "left").withColumn(
-        "_route", F.coalesce("_component", F.col(id_col))
-    )
-    weights = weights or {"train": 80, "val": 10, "test": 10}
-    total = sum(weights.values())
-    if total != 100:
-        raise ValueError(f"split weights must sum to 100, got {total}")
-    bucket = split_bucket_expr(F.col("_route"))
-    expr = None
-    edge = 0
-    for name, w in weights.items():
-        edge += w
-        cond = bucket < edge
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    return routed.withColumn("split", expr).drop("_component", "_route")
+    route = F.coalesce("_component", F.col(id_col))
+    return routed.withColumn("split", _split_expr(route, weights)).drop("_component")
 
 
 def stratified_hash_sample(

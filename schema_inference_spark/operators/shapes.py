@@ -6,15 +6,21 @@ Reference lifecycle (SeqFilesScan.java:282-373):
   (int division) -> fold-merge top-10.
 
 Spark-first rewrite:
-  * one ``groupBy('schema').count()`` — Catalyst partial+final hash agg, so
+  * the shape function is evaluated ONCE per row, in the projection under
+    one ``groupBy('schema').count()`` — Catalyst partial+final hash agg, so
     the hot shape (34% of rows in the reference corpus,
     data/distinct/part-00000…json:1) is combined map-side and never skews a
-    reducer;
-  * percent-of-total via a broadcast cross-join against the single-row total
-    (NOT a global window — a window with an empty partitionBy would funnel
-    the profile table through one task);
+    reducer. Null shapes (P4) are dropped AFTER the aggregation: a filter
+    on the shape column below it would be pushed through the projection
+    and re-evaluate a Python shape UDF per row just to test for null;
+  * percent-of-total via a global window over the aggregated histogram,
+    not a second cross-joined copy of the aggregation. The window funnels
+    the histogram through one task, but it has one row per DISTINCT shape
+    (the reference collected that whole table to the driver);
   * top-k via ``orderBy(desc).limit(k)`` = TakeOrderedAndProject (per-
-    partition heaps + driver merge, no global sort);
+    partition heaps + driver merge, no global sort); a production job
+    takes it from the persisted ``data/distinct`` table, the reference's
+    own re-analysis path, instead of re-scanning the corpus;
   * only the top-k rows are ever collected (vs the reference's whole-map
     collectAsMap, SeqFilesScan.java:315);
   * the schema merge fold runs on the driver over <= k tiny dicts
@@ -28,6 +34,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from schema_inference_spark.functions.type_inference import merge_schemas
 
@@ -36,28 +43,32 @@ DEFAULT_MERGE_N = 10  # reference numberOfTopSchemasToMerge (Constants.java:16)
 
 
 def shape_counts(df: DataFrame, shape_col: Column) -> DataFrame:
-    """DataFrame[schema string, count long, percent long].
+    """DataFrame[schema string, count long, percent long] over the non-null
+    shapes.
 
     ``percent`` uses the reference's integer-division semantics
     (count*100/total with Java int division, CommonUtils.java:245-251).
     """
-    shaped = df.select(shape_col.alias("schema")).where(F.col("schema").isNotNull())
-    counts = shaped.groupBy("schema").count()
-    total = counts.agg(F.sum("count").alias("_total"))
+    counts = df.select(shape_col.alias("schema")).groupBy("schema").count()
+    has_shape = F.col("schema").isNotNull()
+    total = F.sum(F.when(has_shape, F.col("count"))).over(Window.partitionBy())
     return (
-        counts.crossJoin(F.broadcast(total))
-        .select(
-            "schema",
-            F.col("count"),
-            F.expr("count * 100 DIV _total").alias("percent"),
-        )
+        counts.withColumn("_total", total)
+        .where(has_shape)  # above the window: Catalyst cannot push it under
+        .select("schema", "count", F.expr("count * 100 DIV _total").alias("percent"))
     )
 
 
+def top_of_profile(profile: DataFrame, k: int = DEFAULT_TOP_K) -> DataFrame:
+    """Top-k rows of a (schema, count, percent) profile by count
+    (TakeOrderedAndProject; ties broken by schema string so the result is
+    deterministic across partitionings)."""
+    return profile.orderBy(F.desc("count"), F.asc("schema")).limit(k)
+
+
 def top_shapes(df: DataFrame, shape_col: Column, k: int = DEFAULT_TOP_K) -> DataFrame:
-    """Top-k shapes by count (TakeOrderedAndProject; ties broken by schema
-    string so the result is deterministic across partitionings)."""
-    return shape_counts(df, shape_col).orderBy(F.desc("count"), F.asc("schema")).limit(k)
+    """Top-k shapes by count."""
+    return top_of_profile(shape_counts(df, shape_col), k)
 
 
 def shape_exemplars(df: DataFrame, shape_col: Column, raw_col: Column) -> DataFrame:
@@ -87,9 +98,7 @@ def reanalyze_persisted_shapes(spark, path: str, merge_n: int = DEFAULT_MERGE_N)
     (SeqScanAsJson.java:66-77 re-reads data/distinct and re-merges)."""
     # explicit schema: an empty profile dir has nothing to infer from
     profile = spark.read.schema("schema string, count long, percent long").json(path)
-    rows = (
-        profile.orderBy(F.desc("count"), F.asc("schema")).limit(merge_n).collect()
-    )
+    rows = top_of_profile(profile, merge_n).collect()
     schemas = [json.loads(r["schema"]) for r in rows]
     if not schemas:
         return {}

@@ -88,6 +88,9 @@ def test_curate_job_end_to_end_and_resume(spark):
         assert m2["stages"]["pairs"] == {"resumed": True}
         assert m2["stages"]["corpus"] == {"resumed": True}
         assert "rows" in m2["stages"]["packed"]  # recomputed
+        # the summary counts resumed stages from their tables
+        for k in ("near_dup_pairs", "docs_dropped", "splits", "packed_docs", "bins"):
+            assert m2[k] == m[k], k
         assert os.path.getmtime(f"{d}/out/pairs/_SUCCESS") == pairs_mtime
         # identical result after resume
         repacked = {
@@ -117,6 +120,32 @@ def test_curate_job_end_to_end_and_resume(spark):
             "--pack-groups", "4", "--redact-pii", "--resume",
         ])
         assert rc == 0
+
+
+def test_curate_job_computes_components_once(spark, monkeypatch):
+    """The components stage feeds both the dedup drop and the leakage-safe
+    split: one connected-components run, and the summary's counts are the
+    ones the stages recorded when they wrote their tables."""
+    from schema_inference_spark.operators import dedup
+
+    calls = []
+    orig = dedup.duplicate_components
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "duplicate_components", counting)
+    with tempfile.TemporaryDirectory() as d:
+        _corpus(spark).write.mode("overwrite").parquet(f"{d}/in")
+        assert main(["--input", f"{d}/in", "--output", f"{d}/out", "--pack-groups", "4"]) == 0
+        assert len(calls) == 1
+        m = json.load(open(f"{d}/out/metrics.json"))
+        for stage, key in (("pairs", "near_dup_pairs"), ("packed", "packed_docs")):
+            n = spark.read.parquet(f"{d}/out/{stage}").count()
+            assert m["stages"][stage]["rows"] == m[key] == n
+        n_corpus = spark.read.parquet(f"{d}/out/corpus").count()
+        assert m["docs_dropped"] == m["input_docs"] - n_corpus
 
 
 def test_curate_job_fresh_run_clears_stale_stage_markers(spark):

@@ -53,7 +53,7 @@ def test_full_curation_pipeline(spark, sf_dir):
     # 3. leakage-safe split over the kept docs (components already
     #    collapsed, but route by component anyway: belt and braces for
     #    sub-threshold candidates)
-    split_docs = leakage_safe_split(kept, cands, "doc_id")
+    split_docs = leakage_safe_split(kept, duplicate_components(cands, "doc_id"), "doc_id")
     counts = {r["split"]: r["n"] for r in split_docs.groupBy("split").agg(F.count("*").alias("n")).collect()}
     assert set(counts) <= {"train", "val", "test"} and counts["train"] > 0
 
@@ -120,7 +120,7 @@ def test_embedding_curation_chain(spark):
     assert drop.count() == sum(len(v) - 1 for v in clusters.values())
     split_df = leakage_safe_split(
         df.withColumnRenamed("vec_id", "doc_id"),
-        pairs.selectExpr("id_a", "id_b"),
+        duplicate_components(pairs.selectExpr("id_a", "id_b"), "doc_id"),
         "doc_id",
     )
     by_cluster = {

@@ -165,7 +165,7 @@ def test_quantile_sketch_tracks_exact_percentiles(spark, sf_dir):
 def test_leakage_safe_split_keeps_components_together(spark, sf_dir):
     """Near-dup components must land entirely in ONE split (no eval
     contamination), while unpaired rows split like with_split."""
-    from schema_inference_spark.operators.dedup import lsh_candidate_pairs
+    from schema_inference_spark.operators.dedup import duplicate_components, lsh_candidate_pairs
     from schema_inference_spark.operators.sampling import leakage_safe_split, with_split
     from schema_inference_spark.sources.tables import load_table
 
@@ -173,7 +173,7 @@ def test_leakage_safe_split_keeps_components_together(spark, sf_dir):
     pairs = lsh_candidate_pairs(docs, "doc_id", "text", n_perm=4, band_size=2)
     if pairs.isEmpty():
         pytest.skip("no near-dup pairs at this SF")
-    out = leakage_safe_split(docs, pairs, "doc_id")
+    out = leakage_safe_split(docs, duplicate_components(pairs, "doc_id"), "doc_id")
 
     # every pair's two sides share a split
     split_of = out.select("doc_id", "split")

@@ -23,6 +23,27 @@ def images_on_disk(spark, tmp_path_factory):
     return spark.read.parquet(f"{d}/images"), spark.read.parquet(f"{d}/captions")
 
 
+def test_shape_counts_evaluates_the_shape_udf_once(spark):
+    """One shape-UDF evaluation per parsed row: the null-shape filter must
+    not be pushed under the projection (Catalyst would clone the Python UDF
+    into it), and percent must not re-run the aggregation."""
+    from schema_inference_spark.functions.json_shape import make_kv_shape_udf
+    from schema_inference_spark.operators.shapes import shape_counts
+    from schema_inference_spark.sources.delimited import parse_delimited
+
+    rows = [f"t{i}\x01host\x01a\x02{i}\x03b\x02{'x' if i % 3 else '1.5'}" for i in range(30)]
+    kv = parse_delimited(spark.createDataFrame([(r,) for r in rows + ["bad"]], "value string"))
+    counts = shape_counts(kv, make_kv_shape_udf()(F.col("kv")))
+    udf_node = "ArrowEvalPython [kv_shape_udf("
+    assert plan_of(counts).count(udf_node) == 1
+    got = sorted((r["count"], r["percent"]) for r in counts.collect())
+    assert got == [(10, 33), (20, 66)]
+    final = counts._jdf.queryExecution().executedPlan()
+    if final.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        final = final.executedPlan()
+    assert final.toString().count(udf_node) == 1
+
+
 def test_q1_filter_pushdown_and_partial_agg(spark, sf_dir):
     from schema_inference_spark.queries.catalog_core import q1_pricing_summary
 

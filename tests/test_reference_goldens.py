@@ -26,24 +26,24 @@ from schema_inference_spark.functions.json_shape import (
 from schema_inference_spark.functions.type_inference import merge_schemas
 from schema_inference_spark.sources.delimited import parse_delimited
 
-FVALUES = "/root/reference/src/test/resources/fvalues.txt"
-EXPECTED_TREE = "/root/reference/src/test/resources/json/12.json"
-DISTINCT_GLOB = "/root/reference/data/distinct/part-*.json"
+FVALUES = "src/test/resources/fvalues.txt"
+EXPECTED_TREE = "src/test/resources/json/12.json"
+DISTINCT_GLOB = "data/distinct/part-*.json"
 
 
-def test_fvalues_row_schema_matches_reference_tree(spark):
+def test_fvalues_row_schema_matches_reference_tree(spark, reference):
     """parse_delimited + recursive KV shape on the reference's real row must
     reproduce the reference's own expected schema tree (json/12.json),
     compared as parsed dicts (property ORDER is serialization detail; the
     reference emits insertion order, our canon sorts)."""
-    raw = open(FVALUES, encoding="utf-8").read().strip("\n")
+    raw = open(reference(FVALUES), encoding="utf-8").read().strip("\n")
     df = spark.createDataFrame([(raw,)], "value string")
     parsed = parse_delimited(df, "value", drop_empty=False)
     rows = parsed.collect()
     assert len(rows) == 1
     kv = rows[0]["kv"]
     got = kv_schema_of(dict(kv))
-    expected = json.load(open(EXPECTED_TREE, encoding="utf-8"))
+    expected = json.load(open(reference(EXPECTED_TREE), encoding="utf-8"))
     assert got == expected
 
     # and the distributed UDF path emits the same tree
@@ -52,20 +52,20 @@ def test_fvalues_row_schema_matches_reference_tree(spark):
     assert json.loads(s) == expected
 
 
-def _load_distinct_rows():
+def _load_distinct_rows(reference):
     rows = []
-    for f in sorted(glob.glob(DISTINCT_GLOB)):
+    for f in sorted(glob.glob(reference(DISTINCT_GLOB))):
         for line in open(f, encoding="utf-8"):
             if line.strip():
                 rows.append(json.loads(line))
     return rows
 
 
-def test_distinct_output_schemas_parse_and_merge_to_superset():
+def test_distinct_output_schemas_parse_and_merge_to_superset(reference):
     """The reference's real production distinct-schema strings must all parse,
     and the A8 merge fold over the top-10 must yield exactly the union of
     their top-level fields with lattice-consistent types."""
-    rows = _load_distinct_rows()
+    rows = _load_distinct_rows(reference)
     assert len(rows) == 10  # top-10 retention, Constants.java:16
     schemas = [json.loads(r["schema"]) for r in rows]
     assert all(s["type"] == "object" for s in schemas)
@@ -102,12 +102,12 @@ def test_distinct_output_schemas_parse_and_merge_to_superset():
     assert set(rev["properties"]) == union_fields
 
 
-def test_distinct_counts_are_topk_ordered_like_reference_collect():
+def test_distinct_counts_are_topk_ordered_like_reference_collect(reference):
     """Counts in the production output are a valid top-k retention set: our
     top_shapes ordering (count DESC) over them is stable and the recorded
     percents are consistent with integer-percent flooring at some corpus
     total >= sum(counts)."""
-    rows = _load_distinct_rows()
+    rows = _load_distinct_rows(reference)
     counts = sorted((r["count"] for r in rows), reverse=True)
     assert counts[0] == 8282699  # the 34% hot key (SCALE.md skew design)
     total_lo = sum(r["count"] for r in rows)
@@ -144,22 +144,22 @@ def test_kv_value_schema_rules(value, expected):
     assert kv_value_schema(value) == expected
 
 
-def test_event_document_schema_pair_1_to_2():
+def test_event_document_schema_pair_1_to_2(reference):
     """The reference's other genuine document->schema golden pair:
     json/1.json (a real CHAMPION_SPECIAL_KILL event) must produce exactly
     the expected tree json/2.json."""
     from schema_inference_spark.functions.json_shape import json_shape_of
 
-    doc = json.load(open("/root/reference/src/test/resources/json/1.json"))
-    expected = json.load(open("/root/reference/src/test/resources/json/2.json"))
+    doc = json.load(open(reference("src/test/resources/json/1.json")))
+    expected = json.load(open(reference("src/test/resources/json/2.json")))
     assert json_shape_of(doc) == expected
 
 
-def test_three_level_nesting_product_fixture():
+def test_three_level_nesting_product_fixture(reference):
     """product.json: 3-level object nesting recurses correctly."""
     from schema_inference_spark.functions.json_shape import json_shape_of
 
-    doc = json.load(open("/root/reference/src/test/resources/product.json"))
+    doc = json.load(open(reference("src/test/resources/product.json")))
     shape = json_shape_of(doc)
     owner = shape["properties"]["brand"]["properties"]["owner"]
     assert owner == {
@@ -168,7 +168,7 @@ def test_three_level_nesting_product_fixture():
     }
 
 
-def test_malformed_event_error_path(spark):
+def test_malformed_event_error_path(spark, reference):
     """data/json/legs_gameevent4.json carries invalid JSON ('\"gameId\": ,')
     — the documented error-path fixture. The shape UDF must null it (P4
     filter semantics) while its valid siblings all parse."""
@@ -176,7 +176,7 @@ def test_malformed_event_error_path(spark):
 
     suffixes = ["", "2", "3", "4", "5", "6"]
     docs = [
-        open(f"/root/reference/data/json/legs_gameevent{i}.json").read()
+        open(reference(f"data/json/legs_gameevent{i}.json")).read()
         for i in suffixes
     ]
     df = spark.createDataFrame([(d,) for d in docs], "doc string")
@@ -192,7 +192,7 @@ def test_malformed_event_error_path(spark):
             assert g is not None and json.loads(g)["type"] == "object", suffixes[i]
 
 
-def test_additional_fvalues_rows_parse_consistently(spark):
+def test_additional_fvalues_rows_parse_consistently(spark, reference):
     """fvalues2/3/5: more real ^A rows. Every row must flow through
     parse_delimited + the recursive KV shape, and all produced property
     schemas must be mergeable with the fvalues.txt golden superset
@@ -201,7 +201,7 @@ def test_additional_fvalues_rows_parse_consistently(spark):
 
     raws = []
     for name in ("fvalues.txt", "fvalues2.txt", "fvalues3.txt", "fvalues5.txt"):
-        raws.append(open(f"/root/reference/src/test/resources/{name}").read().strip("\n"))
+        raws.append(open(reference(f"src/test/resources/{name}")).read().strip("\n"))
     df = spark.createDataFrame([(r,) for r in raws], "value string")
     parsed = parse_delimited(df, "value", drop_empty=False).collect()
     assert len(parsed) == len(raws)  # all are well-formed 3-field rows
@@ -210,22 +210,20 @@ def test_additional_fvalues_rows_parse_consistently(spark):
         schema = kv_schema_of(dict(row["kv"]))
         assert schema["type"] == "object" and schema["properties"]
         merged = merge_schemas(merged, schema)
-    expected = json.load(open(EXPECTED_TREE, encoding="utf-8"))
+    expected = json.load(open(reference(EXPECTED_TREE), encoding="utf-8"))
     # the merged superset covers every field of the golden tree
     assert set(expected["properties"]) <= set(merged["properties"])
 
 
-def test_reanalyze_reads_references_real_distinct_output(spark):
+def test_reanalyze_reads_references_real_distinct_output(spark, reference):
     """S3 resumability parity on the reference's OWN persisted profile: the
     re-analysis path (SeqScanAsJson.java:66-77 analog) reads the real
     production data/distinct files directly and its top-10 merge equals the
     A8 fold computed independently from the same rows."""
     from schema_inference_spark.operators.shapes import reanalyze_persisted_shapes
 
-    merged = reanalyze_persisted_shapes(
-        spark, "/root/reference/data/distinct", merge_n=10
-    )
-    rows = _load_distinct_rows()
+    merged = reanalyze_persisted_shapes(spark, reference("data/distinct"), merge_n=10)
+    rows = _load_distinct_rows(reference)
     expected = None
     for r in sorted(rows, key=lambda r: (-r["count"], r["schema"]))[:10]:
         expected = merge_schemas(expected, json.loads(r["schema"]))

@@ -8,16 +8,14 @@ import tempfile
 
 from jobs.schema_infer_job import main
 
-FIXTURES = [
-    "/root/reference/src/test/resources/fvalues.txt",
-    "/root/reference/src/test/resources/fvalues2.txt",
-    "/root/reference/src/test/resources/fvalues3.txt",
-    "/root/reference/src/test/resources/fvalues5.txt",
-]
+FIXTURES = ["fvalues.txt", "fvalues2.txt", "fvalues3.txt", "fvalues5.txt"]
 
 
-def test_sequencefile_to_protos_end_to_end(spark):
-    rows = [open(f, encoding="utf-8").read().strip("\n") for f in FIXTURES]
+def test_sequencefile_to_protos_end_to_end(spark, reference):
+    rows = [
+        open(reference(f"src/test/resources/{f}"), encoding="utf-8").read().strip("\n")
+        for f in FIXTURES
+    ]
     rows += rows[:2]  # re-deliver two rows
     with tempfile.TemporaryDirectory() as d:
         (

@@ -16,9 +16,6 @@ from schema_inference_spark.sources.sequencefile import (
     scan_delimited_sequencefile,
 )
 
-FVALUES = "/root/reference/src/test/resources/fvalues.txt"
-EXPECTED_TREE = "/root/reference/src/test/resources/json/12.json"
-
 
 def _write_seqfile(spark, path, rows):
     (
@@ -37,8 +34,8 @@ def test_sequencefile_values_roundtrip(spark):
         assert got == sorted(rows)
 
 
-def test_sequencefile_reference_row_to_schema_tree(spark):
-    raw = open(FVALUES, encoding="utf-8").read().strip("\n")
+def test_sequencefile_reference_row_to_schema_tree(spark, reference):
+    raw = open(reference("src/test/resources/fvalues.txt"), encoding="utf-8").read().strip("\n")
     with tempfile.TemporaryDirectory() as d:
         _write_seqfile(spark, f"{d}/seq", [raw, "not-three-fields", ""])
         parsed = scan_delimited_sequencefile(spark, f"{d}/seq")
@@ -50,6 +47,7 @@ def test_sequencefile_reference_row_to_schema_tree(spark):
         udf = make_kv_shape_udf()
         shape = parsed.select(udf(F.col("kv")).alias("s")).collect()[0]["s"]
         got_props = json.loads(shape)["properties"]
-        expected = json.load(open(EXPECTED_TREE, encoding="utf-8"))["properties"]
+        tree = json.load(open(reference("src/test/resources/json/12.json"), encoding="utf-8"))
+        expected = tree["properties"]
         non_null = {k: v for k, v in expected.items() if v != {"type": "null"}}
         assert got_props == non_null

@@ -61,6 +61,42 @@ def test_failing_corpus_gates_and_retries(spark):
         assert ckpt.where(F.col("status") == "validated").count() == 0
 
 
+def _new_sql_executions(spark, after: int) -> list:
+    """(id, physical plan text) of the SQL executions with id > ``after``."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    it = store.executionsList().iterator()
+    out = []
+    while it.hasNext():
+        e = it.next()
+        if e.executionId() > after:
+            out.append((e.executionId(), e.physicalPlanDescription()))
+    return out
+
+
+def test_verdict_grid_is_built_once(spark):
+    """The verdict grid (parts x checks cross join, drift verdicts unioned
+    in) is computed by one SQL execution; the verdicts write, the
+    checkpoint and the gate counts read that result."""
+    from schema_inference_spark.operators.profile import profile_images
+
+    with tempfile.TemporaryDirectory() as d:
+        _write_corpus(spark, f"{d}/clean", with_violations=False)
+        profile_images(spark.read.parquet(f"{d}/clean/images")).write.parquet(f"{d}/snap")
+        _write_corpus(spark, d, with_violations=True)
+        before = max([e for e, _ in _new_sql_executions(spark, -1)], default=-1)
+        assert main(_args(d, "r1") + ["--snapshot", f"{d}/snap"]) == 1
+        grid_runs = [
+            e for e, plan in _new_sql_executions(spark, before)
+            if "BroadcastNestedLoopJoin" in plan
+        ]
+        assert len(grid_runs) == 1, grid_runs
+
+        verdicts = spark.read.parquet(f"{d}/out/verdicts")
+        assert verdicts.where(F.col("check_name").startswith("drift")).count() > 0
+        ckpt = spark.read.parquet(f"{d}/ckpt")
+        assert ckpt.count() == verdicts.select("part").distinct().count()
+
+
 def test_spark_submit_pyfiles_launch(spark, tmp_path):
     """The north_rule launch mode, literally: package the engine as a
     --py-files zip and run the job via spark-submit in its own JVM (the
